@@ -143,8 +143,9 @@ def main() -> None:
     # table caching.
     profile = "--profile" in sys.argv[1:]
 
-    from cassandra_extractor_spark.registry import QUERIES
+    from cassandra_extractor_spark.registry import QUERIES, SHARED_BUILDS
     from cassandra_extractor_spark.session import get_spark
+    from cassandra_extractor_spark.session_store import invalidate_dedup_chain
     from cassandra_extractor_spark.sources.catalog import TABLES, load_table
 
     # Size shuffle parallelism from the DATA, not the box: the scale
@@ -215,89 +216,23 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             print(f"# warmup {wname} ERROR: {exc}", file=sys.stderr)
 
-    # The corpus-family pipelines share one materialized signature→LSH→
-    # components chain + token stream per session (the in-session analog
-    # of the persisted signature store — see operators/dedup.session_memo).
-    # Charge that one-time build EXPLICITLY: drop whatever the warm-up
-    # cached, rebuild under the clock, and record it as its own line item
-    # ("shared_dedup_chain_build") in the total.  Consumer queries then
-    # time their honest MARGINAL cost over the store, exactly as a real
-    # multi-query session (or the nightly pipeline reading the persisted
-    # store) would pay it — the build is counted once, not hidden and
-    # not multiply charged.
-    from cassandra_extractor_spark.operators.dedup import (
-        invalidate_dedup_chain,
-        shared_clusters,
-        shared_kgrams,
-        shared_pairs,
-    )
-    from cassandra_extractor_spark.operators.text import shared_token_stream
-
+    # The corpus-family pipelines share session-store builds (the
+    # in-session analog of the persisted signature store — see
+    # session_store.session_memo): the signature→LSH→components chain +
+    # token stream, the ANN index, the quality frames and the BM25
+    # posting store.  Charge each one-time build EXPLICITLY: drop
+    # whatever the warm-up cached, rebuild under the clock in dependency
+    # order, and record each as its own line item (``SHARED_BUILDS``).
+    # Consumer queries then time their honest MARGINAL cost over the
+    # store, exactly as a real multi-query session (or the nightly
+    # pipeline reading the persisted store) would pay it — each build is
+    # counted once, not hidden and not multiply charged.
     invalidate_dedup_chain(spark)
-    t0 = time.time()
-    shared_pairs(spark, sf_dir)  # builds shared_shingles + shared_bands too
-    shared_pairs(spark, sf_dir, max_bucket=64)
-    shared_clusters(spark, sf_dir)
-    shared_token_stream(spark, sf_dir)
-    shared_kgrams(spark, sf_dir)
-    chain_build_sec = round(time.time() - t0, 3)
-
-    # Same discipline for the ANN family (round-10 verdict #1): the
-    # normed-embedding frame, the IVF inverted file (corpus→cell
-    # assignment), the IVF-PQ codebook + encoded corpus, and the exact
-    # ground-truth top-k are built ONCE per session and charged here as
-    # "shared_ann_build"; the six-query ANN family then times its honest
-    # marginal cost over the shared index, exactly as a serving layer
-    # reading a persisted index would pay it.
-    from cassandra_extractor_spark.operators.similarity import (
-        shared_ann_cells,
-        shared_ann_codes,
-        shared_brute_topk,
-        shared_embeddings,
-    )
-
-    t0 = time.time()
-    shared_embeddings(spark, sf_dir)
-    shared_ann_cells(spark, sf_dir)
-    shared_ann_codes(spark, sf_dir)  # builds shared_ann_codebook too
-    shared_brute_topk(spark, sf_dir)
-    ann_build_sec = round(time.time() - t0, 3)
-
-    # Session-shared quality frames (optimization r14, the r13 verdict's
-    # top item): the tokenize+score quality projection, the classifier
-    # score aggregation and the repetition verdicts are each built ONCE
-    # per session and read by every consumer (funnel, gate agreement,
-    # training corpus, corpus select/stats, calibration, frontier,
-    # budget select, quality×dup, dedup savings, the standalone
-    # queries).  Same charging discipline as the chains above: the
-    # builds run under the clock as their own line item
-    # ("shared_quality_build"); consumers then time their honest
-    # marginal cost.  Charged BEFORE the BM25 store build below, which
-    # reads the quality frame for its doclens (r14).  NOTE: this is the
-    # one bench.py change (besides the repair-to-median fix below) this
-    # round — it ADDS a queries entry, never removes or renames one.
-    from cassandra_extractor_spark.operators.text import (
-        shared_clf_scores,
-        shared_rep_flags,
-        shared_text_quality,
-    )
-
-    t0 = time.time()
-    shared_text_quality(spark, sf_dir)
-    shared_clf_scores(spark, sf_dir)
-    shared_rep_flags(spark, sf_dir)
-    quality_build_sec = round(time.time() - t0, 3)
-
-    # And the session posting+doclen store backing ns_bm25_store (the
-    # durable-on-disk chain): built once, charged once, consumers time
-    # their marginal cost over the persisted index.
-    from cassandra_extractor_spark.streaming.posting_stream import (
-        ensure_session_bm25_store,
-    )
-
-    t0 = time.time()
-    ensure_session_bm25_store(spark, sf_dir)
-    bm25_store_build_sec = round(time.time() - t0, 3)
+    timings: dict[str, float] = {}
+    for item, build in SHARED_BUILDS.items():
+        t0 = time.time()
+        build(spark, sf_dir)
+        timings[item] = round(time.time() - t0, 3)
 
     cached = []
     if profile:
@@ -315,12 +250,6 @@ def main() -> None:
     # BASELINE.md protocol ("median of 3"); run-level drift is
     # documented in PARITY.md.
     runs = 3
-    timings: dict[str, float] = {
-        "shared_dedup_chain_build": chain_build_sec,
-        "shared_ann_build": ann_build_sec,
-        "shared_bm25_store_build": bm25_store_build_sec,
-        "shared_quality_build": quality_build_sec,
-    }
     # Build-vs-execute split: Python-side plan construction (registry
     # fn + eager schema resolutions, 0.05-0.6 s for the deep ns_*
     # trees) is client authoring overhead, not engine work — a
@@ -504,7 +433,7 @@ def main() -> None:
         pass  # first run / unreadable previous table: nothing to diff
 
     # Reproduce-or-retract (see confirm_regressions): each flagged
-    # query is re-run up to 2× in-process — warm, GC barrier, same
+    # query is re-run 3× in-process — warm, GC barrier, same
     # eager-build rule and scan config as the main pass (the extract
     # section restored maxPartitionBytes above).  Retracted flags move
     # to ambient_spikes and their table entry is repaired to the MEDIAN
@@ -519,7 +448,7 @@ def main() -> None:
             df = fn(spark, sf_dir)
             eager = _jobs() > j0
             samples: list[float] = []
-            for _ in range(2):
+            for _ in range(3):
                 spark.sparkContext._jvm.System.gc()
                 t0 = time.time()
                 target = fn(spark, sf_dir) if eager else df

@@ -28,7 +28,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 from pyspark.sql.types import DoubleType
 
 from cassandra_extractor_spark.operators.text import distinct_tokens, doc_fingerprint_col, tokens
-from cassandra_extractor_spark.sources.catalog import _norm_dir, load_table
+from cassandra_extractor_spark.session_store import (  # noqa: F401 — re-exported
+    _CHAIN_CACHE_CAP,
+    invalidate_dedup_chain,
+    session_memo,
+)
+from cassandra_extractor_spark.sources.catalog import load_table
 
 NUM_PERM = 8  #: minhash permutations
 BANDS = 4  #: LSH bands (NUM_PERM/BANDS rows per band)
@@ -420,84 +425,6 @@ def materialize_once(df: DataFrame) -> DataFrame:
     ``checkpoint()`` dir — same shape, fault-tolerant storage.
     """
     return df.localCheckpoint(eager=True)
-
-
-#: cap for the per-session shared-chain cache: one sf_dir uses ~17
-#: slots (dedup: tok_leads, shingles, kgrams, bands, pair_base,
-#: pairs×2 bucket policies, clusters, token_stream; quality:
-#: text_quality, clf_scores, rep_flags; ANN: normed embeddings, cells,
-#: codebook, codes, brute ground truth); 48 lets two standard sf dirs
-#: coexist while one-shot differential tmp dirs churn through the tail
-#: (same rationale as catalog._TABLE_CACHE_CAP)
-_CHAIN_CACHE_CAP = 48
-
-
-def session_memo(spark: SparkSession, key: tuple, builder) -> DataFrame:
-    """Session-scoped memo for MATERIALIZED (localCheckpoint'd) frames —
-    the single-session analog of the persisted signature store
-    (``write_signature_store``): expensive corpus-wide intermediates are
-    built ONCE per (session, corpus snapshot) and every registry entry
-    that needs them reads the materialized blocks instead of re-running
-    the pipeline.
-
-    Each entry stays standalone: a cache miss builds the chain, so any
-    query works alone; in a multi-query session (the correctness sweep,
-    the bench, a real pipeline run) the corpus is signed exactly once.
-    At 100 TB the durable variant is the bucketed signature store on
-    disk; in-session, localCheckpoint blocks play that role.  The cache
-    lives ON the session object (a replaced session can't serve stale
-    JVM handles) and is LRU-capped; evicted frames are reclaimed by
-    Spark's ContextCleaner once unreferenced.
-    """
-    cache: dict = spark.__dict__.setdefault("_ce_dedup_chain", {})
-    # key convention: key[1] is the corpus directory — normalize it so
-    # two spellings of one dir (trailing slash, relative vs absolute)
-    # share a chain, and invalidation with either spelling hits it
-    key = (key[0], _norm_dir(key[1]), *key[2:])
-    if key in cache:
-        cache[key] = cache.pop(key)  # move-to-end: mark most recent
-        return cache[key]
-    df = builder()
-    while len(cache) >= _CHAIN_CACHE_CAP:
-        cache.pop(next(iter(cache)))  # evict least-recently-used
-    cache[key] = df
-    return df
-
-
-def invalidate_dedup_chain(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Drop memoized chain frames — required after rewriting a corpus
-    directory in place (mirrors ``invalidate_table_cache``), and used by
-    the bench to charge the one-time chain build explicitly."""
-    cache = spark.__dict__.get("_ce_dedup_chain")
-    # the session BM25 store cache (streaming/posting_stream.
-    # ensure_session_bm25_store) memoizes DISK tables derived from the
-    # same corpus dirs — invalidate it under the same contract, and
-    # DROP the managed tables so the warehouse disk is released with
-    # the cache entry (not orphaned)
-    stores = spark.__dict__.get("_ce_posting_store")
-    dropped: list[tuple[str, str]] = []
-    if sf_dir is None:
-        if cache:
-            cache.clear()
-        if stores:
-            dropped = list(stores.values())
-            stores.clear()
-    else:
-        norm = _norm_dir(sf_dir)
-        if cache:
-            for key in [k for k in cache if k[1] == norm]:
-                del cache[key]
-        if stores:
-            entry = stores.pop(norm, None)
-            if entry is not None:
-                dropped = [entry]
-    if dropped:
-        from cassandra_extractor_spark.streaming.posting_stream import (
-            drop_session_bm25_store,
-        )
-
-        for entry in dropped:
-            drop_session_bm25_store(spark, entry)
 
 
 def shared_tok_leads(spark: SparkSession, sf_dir: str) -> DataFrame:

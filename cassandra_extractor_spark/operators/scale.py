@@ -26,7 +26,17 @@ def write_bucketed(
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table."""
+    """Persist as a bucketed (and optionally sorted) managed table.
+
+    A table the catalog does not know may still own a warehouse
+    directory (a killed run, a previous session) — saveAsTable would
+    then fail with LOCATION_ALREADY_EXISTS, so the orphan is removed
+    first."""
+    from cassandra_extractor_spark.session_store import drop_managed_tables
+
+    spark = df.sparkSession
+    if not spark.catalog.tableExists(table_name):
+        drop_managed_tables(spark, [table_name])
     writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)

@@ -23,8 +23,8 @@ from cassandra_extractor_spark.operators.dedup import (
     make_fold_arrow_kernel,
     materialize_once,
     norm,
-    session_memo,
 )
+from cassandra_extractor_spark.session_store import session_memo
 from cassandra_extractor_spark.sources.catalog import load_table
 
 N_QUERIES = 10  #: vec_id < N_QUERIES are the query set in the demo queries
@@ -86,7 +86,7 @@ def shared_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetry, k-means step) reads these materialized blocks instead of
     re-scanning parquet and re-folding the norm.  At 100 TB this is the
     persisted normalized-vector store; in-session, localCheckpoint
-    blocks play that role (see ``dedup.session_memo``)."""
+    blocks play that role (see ``session_store.session_memo``)."""
     return session_memo(
         spark,
         ("ann_emb", sf_dir),

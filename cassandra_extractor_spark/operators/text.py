@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from cassandra_extractor_spark.session_store import session_memo
 from cassandra_extractor_spark.sources.catalog import load_table
 
 #: per-language marker words for the n-gram/stopword language-ID heuristic
@@ -335,10 +336,7 @@ def shared_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per (session, corpus), charged by the bench as its own line
     item (``shared_quality_build``), every consumer reads the
     materialized blocks."""
-    from cassandra_extractor_spark.operators.dedup import (
-        materialize_once,
-        session_memo,
-    )
+    from cassandra_extractor_spark.operators.dedup import materialize_once
 
     return session_memo(
         spark,
@@ -473,10 +471,7 @@ def shared_rep_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnel, the training-corpus pipeline and the standalone query each
     re-ran the bigram aggregate over the token stream before r14; one
     doc-sized verdict frame serves all three (guide §1.2)."""
-    from cassandra_extractor_spark.operators.dedup import (
-        materialize_once,
-        session_memo,
-    )
+    from cassandra_extractor_spark.operators.dedup import materialize_once
 
     return session_memo(
         spark,
@@ -591,10 +586,7 @@ def shared_clf_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     calibration, gate agreement, the funnel and the training-corpus
     pipeline (optimization r14, guide §1.2; charged by the bench under
     ``shared_quality_build``)."""
-    from cassandra_extractor_spark.operators.dedup import (
-        materialize_once,
-        session_memo,
-    )
+    from cassandra_extractor_spark.operators.dedup import materialize_once
 
     return session_memo(
         spark,

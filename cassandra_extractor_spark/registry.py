@@ -26,6 +26,7 @@ from cassandra_extractor_spark.streaming.quantile import (
     q122_hist_quantile as _q122_hist_quantile,
 )
 from cassandra_extractor_spark.streaming.posting_stream import (
+    ensure_session_bm25_store,
     ns_bm25_store as _ns_bm25_store,
 )
 from cassandra_extractor_spark.streaming.stateful import ns_sessionize as _ns_sessionize
@@ -361,6 +362,38 @@ _PRIORITY_PREFIX = [
 ]
 QUERIES = {name: QUERIES[name] for name in _PRIORITY_PREFIX} | {
     k: v for k, v in QUERIES.items() if k not in set(_PRIORITY_PREFIX)
+}
+
+
+def _dedup_chain_build(spark: SparkSession, sf_dir: str) -> None:
+    D.shared_pairs(spark, sf_dir)  # builds shared_shingles + shared_bands too
+    D.shared_pairs(spark, sf_dir, max_bucket=64)
+    D.shared_clusters(spark, sf_dir)
+    TX.shared_token_stream(spark, sf_dir)
+    D.shared_kgrams(spark, sf_dir)
+
+
+def _ann_build(spark: SparkSession, sf_dir: str) -> None:
+    S.shared_embeddings(spark, sf_dir)
+    S.shared_ann_cells(spark, sf_dir)
+    S.shared_ann_codes(spark, sf_dir)  # builds shared_ann_codebook too
+    S.shared_brute_topk(spark, sf_dir)
+
+
+def _quality_build(spark: SparkSession, sf_dir: str) -> None:
+    TX.shared_text_quality(spark, sf_dir)
+    TX.shared_clf_scores(spark, sf_dir)
+    TX.shared_rep_flags(spark, sf_dir)
+
+
+#: the session-store builds that consumers share, as charged line items
+#: (name → build over one corpus dir), in DEPENDENCY order: the BM25
+#: store reads the token stream and the quality frame, so it comes last
+SHARED_BUILDS: dict[str, Callable[[SparkSession, str], object]] = {
+    "shared_dedup_chain_build": _dedup_chain_build,
+    "shared_ann_build": _ann_build,
+    "shared_quality_build": _quality_build,
+    "shared_bm25_store_build": ensure_session_bm25_store,
 }
 
 

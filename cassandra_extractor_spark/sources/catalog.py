@@ -118,9 +118,9 @@ def invalidate_table_cache(spark: SparkSession, sf_dir: str | None = None) -> No
             norm = _norm_dir(sf_dir)
             for key in [k for k in cache if k[0] == norm]:
                 del cache[key]
-    # the shared dedup/token-stream chain caches MATERIALIZED data over
-    # these tables — stale blocks are worse than a stale file listing
-    from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain
+    # the session store caches MATERIALIZED data over these tables —
+    # stale blocks are worse than a stale file listing
+    from cassandra_extractor_spark.session_store import invalidate_dedup_chain
 
     invalidate_dedup_chain(spark, sf_dir)
 

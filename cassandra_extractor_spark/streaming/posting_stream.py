@@ -28,12 +28,14 @@ maintains itself.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
+
+from cassandra_extractor_spark.session_store import drop_managed_tables, session_memo
+from cassandra_extractor_spark.sources.catalog import _norm_dir
 
 _POSTING_COLS = ["doc_id", "tok", "tf"]
 _DOCLEN_COLS = ["doc_id", "dl"]
@@ -346,11 +348,10 @@ def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> tuple[str, st
     """Build (once per session per corpus dir) the batch posting +
     doc-length stats stores for ``sf_dir``'s documents table and return
     their table names — the durable-on-disk analog of the dedup/ANN
-    session chains, backing the ``ns_bm25_store`` registry entry.
-    Invalidation rides the shared-chain invalidator
-    (``dedup.invalidate_dedup_chain`` clears this cache too, and — via
-    ``drop_session_bm25_store`` — drops the managed tables themselves,
-    so a forgotten store releases its disk instead of orphaning).
+    session chains, backing the ``ns_bm25_store`` registry entry.  The
+    entry lives in the session store with ``drop_managed_tables`` as
+    its disposer: invalidation, LRU eviction and interpreter exit all
+    drop the tables and their warehouse directories.
 
     The table tag folds in the session's ``applicationId``: the store
     is a SESSION store, and keying the on-disk name by corpus alone let
@@ -358,117 +359,46 @@ def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> tuple[str, st
     tables mid-read (observed as transient hash failures under two
     concurrent gate runs).  A production deployment's durable shared
     index is the explicitly-named ``write_posting_store`` path; this
-    cache is each session's private build of it."""
-    import hashlib
+    entry is each session's private build of it."""
 
-    from cassandra_extractor_spark.operators.dedup import _norm_dir
+    def build() -> tuple[str, str]:
+        import hashlib
 
-    cache: dict = spark.__dict__.setdefault("_ce_posting_store", {})
-    key = _norm_dir(sf_dir)
-    if key in cache:
-        return cache[key]
-    if not spark.__dict__.get("_ce_posting_store_exit_hook"):
-        # first build in this session: make sure whatever is still in
-        # the cache at interpreter exit is dropped — tool processes
-        # (gate/bench/probe) otherwise leak 2 tables per run
-        import atexit
+        from cassandra_extractor_spark.operators.text import (
+            shared_text_quality,
+            shared_token_stream,
+        )
 
-        wh0 = spark.conf.get("spark.sql.warehouse.dir", "")
-        wh0 = wh0[len("file:") :] if wh0.startswith("file:") else wh0
-        if not _EXIT_CLEANUP:
-            atexit.register(_drop_all_session_stores)
-        _EXIT_CLEANUP.append((cache, wh0))
-        spark.__dict__["_ce_posting_store_exit_hook"] = True
-    nonce = f"{spark.sparkContext.applicationId}|{key}"
-    tag = hashlib.md5(nonce.encode()).hexdigest()[:10]
-    postings_t = f"bm25_postings_{tag}"
-    doclens_t = f"bm25_doclens_{tag}"
-    # a PREVIOUS incarnation of this app id (restarted session reusing
-    # a checkpointed app id is impossible locally, but a stale crash
-    # artifact isn't) may have left the managed-table location on disk
-    # without this session's catalog knowing the table — drop both
-    # sides so saveAsTable never hits LOCATION_ALREADY_EXISTS
-    drop_session_bm25_store(spark, (postings_t, doclens_t))
-    # postings from the session-shared token stream (one corpus
-    # tokenize per session; optimization r13, guide §1.2) — the same
-    # (doc_id, tok != '') → count aggregation as ``build_postings``,
-    # proven element-identical.  The streaming micro-batch ingest keeps
-    # ``build_postings`` (its batches are not the session corpus).
-    from cassandra_extractor_spark.operators.text import (
-        shared_text_quality,
-        shared_token_stream,
-    )
+        nonce = f"{spark.sparkContext.applicationId}|{_norm_dir(sf_dir)}"
+        tag = hashlib.md5(nonce.encode()).hexdigest()[:10]
+        postings_t = f"bm25_postings_{tag}"
+        doclens_t = f"bm25_doclens_{tag}"
+        # postings from the session-shared token stream (one corpus
+        # tokenize per session; optimization r13, guide §1.2) — the same
+        # (doc_id, tok != '') → count aggregation as ``build_postings``,
+        # proven element-identical.  The streaming micro-batch ingest
+        # keeps ``build_postings`` (its batches are not the session corpus).
+        session_postings = (
+            shared_token_stream(spark, sf_dir)
+            .select("doc_id", "tok")
+            .where(F.col("tok") != "")
+            .groupBy("doc_id", "tok")
+            .agg(F.count("*").cast("long").alias("tf"))
+        )
+        write_posting_store(session_postings, postings_t)
+        # doclens ride the session-shared quality frame (optimization
+        # r14, guide §1.2): ``n_tokens`` there IS ``size(tokens(text))``
+        # — the identical expression ``build_doclens`` computes — so the
+        # store build drops its last private corpus tokenize.  The
+        # explicit ``write_posting_store`` path and the streaming ingest
+        # keep ``build_doclens`` (their inputs are not the session corpus).
+        session_doclens = shared_text_quality(spark, sf_dir).select(
+            "doc_id", F.col("n_tokens").alias("dl")
+        )
+        write_doclen_store(session_doclens, doclens_t)
+        return postings_t, doclens_t
 
-    session_postings = (
-        shared_token_stream(spark, sf_dir)
-        .select("doc_id", "tok")
-        .where(F.col("tok") != "")
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    write_posting_store(session_postings, postings_t)
-    # doclens ride the session-shared quality frame (optimization r14,
-    # guide §1.2): ``n_tokens`` there IS ``size(tokens(text))`` — the
-    # identical expression ``build_doclens`` computes — so the store
-    # build drops its last private corpus tokenize.  The explicit
-    # ``write_posting_store`` path and the streaming ingest keep
-    # ``build_doclens`` (their inputs are not the session corpus).
-    session_doclens = shared_text_quality(spark, sf_dir).select(
-        "doc_id", F.col("n_tokens").alias("dl")
-    )
-    write_doclen_store(session_doclens, doclens_t)
-    cache[key] = (postings_t, doclens_t)
-    return cache[key]
-
-
-def drop_session_bm25_store(spark: SparkSession, entry: tuple[str, str]) -> None:
-    """Drop a session store's managed tables AND their warehouse
-    directories.  Invalidation calls this so the disk is released with
-    the cache entry — without it every hypothesis/differential corpus
-    left two orphaned ``bm25_*`` table directories behind, accruing
-    without bound across runs."""
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    wh = wh[len("file:") :] if wh.startswith("file:") else wh
-    for t in entry:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if wh:
-            shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-
-
-#: (store-cache dict, warehouse path) pairs whose tables the interpreter
-#: must release at exit — see _drop_all_session_stores
-_EXIT_CLEANUP: list[tuple[dict, str]] = []
-
-
-def _drop_all_session_stores() -> None:
-    """atexit hook: a session store is SESSION-scoped state, so a
-    process that builds one and exits without invalidating (a gate
-    run, a bench, a notebook) must not leave its app-id-tagged tables
-    accruing in the shared warehouse.  Tries a catalog DROP while a
-    session is still alive, then removes the directories regardless
-    (a stale catalog row without a directory is harmless: every build
-    pre-drops its own names before saveAsTable)."""
-    import shutil
-
-    from pyspark.sql import SparkSession
-
-    sp = SparkSession.getActiveSession()
-    for cache, wh in _EXIT_CLEANUP:
-        for entry in list(cache.values()):
-            for t in entry:
-                if sp is not None:
-                    try:
-                        sp.sql(f"DROP TABLE IF EXISTS {t}")
-                    except Exception:  # noqa: BLE001 — JVM may be gone
-                        sp = None
-                if wh:
-                    shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-        # clear the cache (tables are gone) but KEEP the registration:
-        # a later build in the same session must stay covered, and a
-        # re-invocation over cleared caches is a cheap no-op
-        cache.clear()
+    return session_memo(spark, ("bm25_store", sf_dir), build, dispose=drop_managed_tables)
 
 
 def ns_bm25_store(spark: SparkSession, sf_dir: str) -> DataFrame:

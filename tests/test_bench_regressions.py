@@ -101,12 +101,14 @@ def test_confirm_regressions_retracts_ambient_spike():
         {"query": "q03", "base_sec": 1.0, "cur_sec": 3.0, "ratio": 3.0}
     ]
     confirmed, ambient = confirm_regressions(
-        flagged, 1.0, lambda name: [1.05, 0.98]
+        flagged, 1.0, lambda name: [1.05, 0.98, 1.2]
     )
     assert confirmed == []
     assert [r["query"] for r in ambient] == ["q03"]
-    assert ambient[0]["reruns"] == [1.05, 0.98]
+    assert ambient[0]["reruns"] == [1.05, 0.98, 1.2]
     assert ambient[0]["rerun_min"] == 0.98
+    # the repair value is the true median of the three re-runs
+    assert ambient[0]["rerun_median"] == 1.05
     assert ambient[0]["reproduced"] is False
 
 

@@ -5,6 +5,8 @@ scans, checkpoint restart, replay overwrite, and idempotent compaction
 
 from __future__ import annotations
 
+import pathlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +22,7 @@ from cassandra_extractor_spark.streaming.posting_stream import (
 )
 
 SCHEMA = "doc_id LONG, text STRING"
+_ROOT = str(pathlib.Path(__file__).resolve().parents[1])
 
 
 def _write_batch(spark, tmp_path, src, file_no: int, df) -> None:
@@ -127,6 +130,30 @@ def test_posting_store_parity_restart_pruning_compaction(
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_write_heals_orphan_table_location(spark):
+    """A table location left on disk without a catalog entry (a killed
+    run, an earlier session on the same warehouse) must not fail the
+    next write with LOCATION_ALREADY_EXISTS — the write path removes
+    the orphan and the store reads back exactly what was written."""
+    import os
+
+    from cassandra_extractor_spark.session_store import warehouse_dir
+
+    table = "orphan_post_t"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    orphan = os.path.join(warehouse_dir(spark), table)
+    os.makedirs(orphan, exist_ok=True)
+    with open(os.path.join(orphan, "part-stale.parquet"), "wb") as f:
+        f.write(b"stale")
+    docs = spark.createDataFrame([(1, "a b a"), (2, "b c")], SCHEMA)
+    try:
+        write_posting_store(build_postings(docs), table, n_buckets=2)
+        got = sorted(tuple(r) for r in spark.table(table).collect())
+        assert got == [(1, "a", 2), (1, "b", 1), (2, "b", 1), (2, "c", 1)]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_exiting_process_releases_its_session_store(spark, sf_dir):
     """Round-12: a process that builds a session BM25 store and exits
     WITHOUT invalidating (a gate run, a bench, a notebook) must not
@@ -137,14 +164,14 @@ def test_exiting_process_releases_its_session_store(spark, sf_dir):
     import subprocess
     import sys
 
+    from cassandra_extractor_spark.session_store import _dispose_all_at_exit, warehouse_dir
     from cassandra_extractor_spark.streaming.posting_stream import (
-        _drop_all_session_stores,
         ensure_session_bm25_store,
     )
 
     script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {_ROOT!r})
 from cassandra_extractor_spark.session import get_spark
 from cassandra_extractor_spark.streaming.posting_stream import (
     ensure_session_bm25_store)
@@ -158,33 +185,34 @@ print("TABLES", *tables)
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     theirs = next(
         l.split()[1:] for l in out.stdout.splitlines() if l.startswith("TABLES")
     )
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    wh = wh[len("file:") :] if wh.startswith("file:") else wh
+    wh = warehouse_dir(spark)
     for t in theirs:
         assert not os.path.isdir(os.path.join(wh, t)), t
     # in-process spelling of the same contract: the hook drops this
-    # session's live store too (cache cleared, tables + dirs gone) and
+    # session's live store too (entry gone, tables + dirs gone) and
     # stays registered, so a REBUILD after a manual invocation is
     # still covered at exit
+    def assert_disposed(tables):
+        assert tables not in spark.__dict__["_ce_dedup_chain"].values()
+        for t in tables:
+            assert not spark.catalog.tableExists(t), t
+            assert not os.path.isdir(os.path.join(wh, t)), t
+
     mine = ensure_session_bm25_store(spark, sf_dir)
-    _drop_all_session_stores()
-    assert spark.__dict__["_ce_posting_store"] == {}
-    for t in mine:
-        assert not spark.catalog.tableExists(t), t
-        assert not os.path.isdir(os.path.join(wh, t)), t
+    _dispose_all_at_exit()
+    assert_disposed(mine)
     rebuilt = ensure_session_bm25_store(spark, sf_dir)
     assert rebuilt == mine  # same session → same deterministic names…
     for t in rebuilt:  # …but genuinely rebuilt on disk
         assert spark.catalog.tableExists(t), t
-    from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain
-
-    invalidate_dedup_chain(spark, sf_dir)
+    _dispose_all_at_exit()  # …and covered by the exit hook again
+    assert_disposed(rebuilt)
 
 
 def test_auto_compaction_mid_stream(spark, sf_dir, tmp_path):
@@ -359,13 +387,18 @@ def test_ns_bm25_store_registry_entry(spark, sf_dir):
     assert got == want
     first = ensure_session_bm25_store(spark, sf_dir)
     assert ensure_session_bm25_store(spark, sf_dir) is first
-    # invalidation contract: the shared-chain invalidator is SCOPED —
+    # invalidation contract: the session-store invalidator is SCOPED —
     # it evicts this corpus's entry (other corpora built earlier in the
     # session legitimately keep theirs) and drops its managed tables
-    from cassandra_extractor_spark.operators.dedup import _norm_dir, invalidate_dedup_chain
+    from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain
+    from cassandra_extractor_spark.session_store import session_memo
 
+    other = ("probe", "/elsewhere")
+    kept = session_memo(spark, other, lambda: object())
     invalidate_dedup_chain(spark, sf_dir)
-    assert _norm_dir(sf_dir) not in spark.__dict__["_ce_posting_store"]
+    assert first not in spark.__dict__["_ce_dedup_chain"].values()
+    assert session_memo(spark, other, lambda: None) is kept
+    invalidate_dedup_chain(spark, "/elsewhere")
     for t in first:
         assert not spark.catalog.tableExists(t), t
 
@@ -397,7 +430,7 @@ def test_two_process_store_isolation(spark, sf_dir):
     # only its own app-id-tagged tables) and exit
     script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {_ROOT!r})
 from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain
 from cassandra_extractor_spark.session import get_spark
 from cassandra_extractor_spark.streaming.posting_stream import (
@@ -415,7 +448,7 @@ spark.stop()
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=_ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     lines = dict(

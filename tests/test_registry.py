@@ -68,3 +68,29 @@ def test_session_memo_lru_and_invalidation(tmp_path):
     assert ("bands", "/d1") not in spark.__dict__["_ce_dedup_chain"]
     invalidate_dedup_chain(spark)
     assert spark.__dict__["_ce_dedup_chain"] == {}
+
+    # disposer-bearing entries (the BM25 store's managed tables): each
+    # is disposed exactly once, whichever path removes it, and a cache
+    # hit never disposes
+    disposed = []
+
+    def memo_disposing(d):
+        return session_memo(
+            spark, ("store", d), builder(d), dispose=lambda s, obj: disposed.append(obj)
+        )
+
+    memo_disposing("/s1")
+    memo_disposing("/s1")  # hit
+    assert disposed == []
+    for i in range(_CHAIN_CACHE_CAP):  # LRU eviction
+        session_memo(spark, ("bands", f"/y{i}"), builder(f"y{i}"))
+    assert disposed == ["frame-/s1"]
+    memo_disposing("/s2")
+    invalidate_dedup_chain(spark, "/s2/")  # scoped invalidation
+    invalidate_dedup_chain(spark, "/s2")
+    assert disposed == ["frame-/s1", "frame-/s2"]
+    memo_disposing("/s3")
+    memo_disposing("/s4")
+    invalidate_dedup_chain(spark)  # full invalidation
+    invalidate_dedup_chain(spark)
+    assert sorted(disposed[2:]) == ["frame-/s3", "frame-/s4"] and len(disposed) == 4

@@ -75,15 +75,9 @@ def ensure_panel_tier(spark, regen: bool = False) -> str:
 
 
 def run_arm(cpus: int) -> dict[str, float]:
-    from cassandra_extractor_spark.operators.dedup import (
-        invalidate_dedup_chain,
-        shared_clusters,
-        shared_kgrams,
-        shared_pairs,
-    )
-    from cassandra_extractor_spark.operators.text import shared_token_stream
-    from cassandra_extractor_spark.registry import QUERIES
+    from cassandra_extractor_spark.registry import QUERIES, SHARED_BUILDS
     from cassandra_extractor_spark.session import get_spark
+    from cassandra_extractor_spark.session_store import invalidate_dedup_chain
 
     spark = get_spark(f"sf1-panel-{cpus}")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -108,23 +102,17 @@ def run_arm(cpus: int) -> dict[str, float]:
     advisory = max(512 * 1024, total // (cpus * 2))
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(advisory))
 
-    def chain_build() -> None:
-        shared_pairs(spark, sf_dir)
-        shared_pairs(spark, sf_dir, max_bucket=64)
-        shared_clusters(spark, sf_dir)
-        shared_token_stream(spark, sf_dir)
-        shared_kgrams(spark, sf_dir)
-
+    chain_build = SHARED_BUILDS["shared_dedup_chain_build"]
     results: dict[str, float] = {}
     # warm-up: one untimed cold build absorbs JIT/classloading
     invalidate_dedup_chain(spark)
-    chain_build()
+    chain_build(spark, sf_dir)
 
     samples = []
     for _ in range(3):
         invalidate_dedup_chain(spark)
         t0 = time.time()
-        chain_build()
+        chain_build(spark, sf_dir)
         samples.append(time.time() - t0)
     results["shared_dedup_chain_build"] = round(sorted(samples)[1], 3)
 
@@ -143,6 +131,9 @@ def run_arm(cpus: int) -> dict[str, float]:
 def main() -> None:
     if "--cpus" in sys.argv:
         cpus = int(sys.argv[sys.argv.index("--cpus") + 1])
+        # get_spark sizes local[N] from this variable: a single arm run
+        # by hand must measure the core count it is labelled with
+        os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
         print(json.dumps({"cpus": cpus, "panel": run_arm(cpus)}))
         return
 

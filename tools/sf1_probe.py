@@ -148,15 +148,9 @@ def _size_session_to(spark: SparkSession, sf_dir: str) -> None:
 
 
 def main() -> None:
-    from cassandra_extractor_spark.operators.dedup import (
-        invalidate_dedup_chain,
-        shared_clusters,
-        shared_kgrams,
-        shared_pairs,
-    )
-    from cassandra_extractor_spark.operators.text import shared_token_stream
-    from cassandra_extractor_spark.registry import QUERIES
+    from cassandra_extractor_spark.registry import QUERIES, SHARED_BUILDS
     from cassandra_extractor_spark.session import get_spark
+    from cassandra_extractor_spark.session_store import invalidate_dedup_chain
 
     regen = "--regen" in sys.argv[1:]
     spark = get_spark("sf1-probe", shuffle_partitions=32)
@@ -166,13 +160,7 @@ def main() -> None:
         for tag, factor in FACTORS.items()
     }
 
-    def chain_build(sf_dir: str) -> None:
-        shared_pairs(spark, sf_dir)
-        shared_pairs(spark, sf_dir, max_bucket=64)
-        shared_clusters(spark, sf_dir)
-        shared_token_stream(spark, sf_dir)
-        shared_kgrams(spark, sf_dir)
-
+    chain_build = SHARED_BUILDS["shared_dedup_chain_build"]
     results: dict[str, dict[str, float]] = {}
 
     def record(name: str, tag: str, sec: float) -> None:
@@ -183,7 +171,7 @@ def main() -> None:
         # warm-up: one untimed cold chain build per tier absorbs
         # first-touch JIT/classloading (the bench warm-up discipline)
         invalidate_dedup_chain(spark)
-        chain_build(sf_dir)
+        chain_build(spark, sf_dir)
 
         # 1. dedup chain build — COLD per run, the bench's
         # shared_dedup_chain_build line item end-to-end
@@ -191,7 +179,7 @@ def main() -> None:
         for _ in range(3):
             invalidate_dedup_chain(spark)
             t0 = time.time()
-            chain_build(sf_dir)
+            chain_build(spark, sf_dir)
             samples.append(time.time() - t0)
         record("shared_dedup_chain_build", tag, sorted(samples)[1])
 

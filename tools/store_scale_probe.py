@@ -75,6 +75,7 @@ def main() -> None:
         write_signature_store,
     )
     from cassandra_extractor_spark.session import get_spark
+    from cassandra_extractor_spark.session_store import drop_managed_tables
     from cassandra_extractor_spark.sources.catalog import load_table
     from cassandra_extractor_spark.streaming.ann_stream import (
         _read_centroids,
@@ -186,8 +187,7 @@ def main() -> None:
             .save()
         )
 
-        for t in (sig_table, post_table, dl_table):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_managed_tables(spark, (sig_table, post_table, dl_table))
 
     lines = [
         "## store-size probe — fixed batch/query against a 10× store (round 13)",
